@@ -24,11 +24,11 @@ Quirk policy (SURVEY §2.9) — defaults FIX, ``parity=True`` reproduces:
   frame by default and the raw frame under ``parity=True``.
 
 Scale notes (100 TB): dims are distinct-projections (one partial-agg
-shuffle each, output tiny); the fact build broadcasts all three dims
-(J1); bridges shuffle on the explode key only when the dim is too big to
-broadcast — at reference scale every dim broadcasts. ``xxhash64`` keys
-need no global coordination (vs ``row_number``, which would serialize
-through one task).
+shuffle each, output tiny); in fixed mode the fact broadcasts only the
+dates dim (J1) and the bridges key their exploded rows with no join at
+all; parity mode broadcasts every dim it joins. ``xxhash64`` keys need
+no global coordination (vs ``row_number``, which would serialize through
+one task), and any stage can recompute a key from its natural key.
 """
 
 from __future__ import annotations
@@ -182,15 +182,23 @@ def build_authors(clean: DataFrame, dedup: bool = True) -> DataFrame:
 
 def build_articles(
     clean: DataFrame,
-    topics: DataFrame,
     dates: DataFrame,
-    publishers: DataFrame,
+    topics: DataFrame | None = None,
+    publishers: DataFrame | None = None,
 ) -> DataFrame:
-    """Articles fact (ETL cell 41, raw 1247-1266): three chained left
-    equi-joins to the dims (SURVEY J1). All dims are broadcast — at any
-    realistic scale the dims are many orders smaller than the fact, so
-    none of the three joins shuffles the fact."""
-    base = clean.select(
+    """Articles fact (ETL cell 41, raw 1247-1266; SURVEY J1). ``DateID``
+    comes from a broadcast left join to the dates dim, because one
+    ``PublicationDate`` can map to several (Day, Month, Year) rows.
+
+    ``TopicID`` is ``surrogate_key(Topic)`` computed on the fact row
+    (NULL for a NULL topic, as the left join gives) unless ``topics`` is
+    passed: parity mode joins its dim, which is built from the unscrubbed
+    raw frame, so a topic the scrub changed finds no match there.
+    ``publishers`` is joined only when passed: parity mode's dim is not
+    one row per ISSN and fans the fact out on purpose. The fixed dim
+    (``dedup_issn``) is, and the join selects no column, so skipping it
+    changes nothing."""
+    fact = clean.select(
         F.col("doi").alias("DOI"),
         F.col("title").alias("Title"),
         F.col("abstract").alias("Abstract"),
@@ -200,29 +208,39 @@ def build_articles(
         F.col("website").alias("Website"),
         F.col("topic").alias("Topic"),
     )
-    return (
-        base.join(F.broadcast(topics), "Topic", "left")
-        .join(
-            F.broadcast(dates.select("DateID", "PublicationDate")),
-            "PublicationDate",
-            "left",
+    if topics is None:
+        fact = fact.withColumn(
+            "TopicID", F.when(F.col("Topic").isNotNull(), surrogate_key("Topic"))
         )
-        .join(F.broadcast(publishers), "ISSN", "left")
-        .select(
-            "DOI", "Title", "Abstract", "Citations", "ISSN",
-            "DateID", "Website", "TopicID",
-        )
+    else:
+        fact = fact.join(F.broadcast(topics), "Topic", "left")
+    fact = fact.join(
+        F.broadcast(dates.select("DateID", "PublicationDate")),
+        "PublicationDate",
+        "left",
+    )
+    if publishers is not None:
+        fact = fact.join(F.broadcast(publishers), "ISSN", "left")
+    return fact.select(
+        "DOI", "Title", "Abstract", "Citations", "ISSN",
+        "DateID", "Website", "TopicID",
     )
 
 
 def build_author_article_map(
-    clean: DataFrame, authors: DataFrame, on_identity: bool = True
+    clean: DataFrame, authors: DataFrame | None = None, on_identity: bool = True
 ) -> DataFrame:
-    """Author bridge (ETL cell 43, raw 1287-1299): explode + inner join
-    back to the dim (SURVEY J2). ``on_identity=True`` fixes Q3 by
-    joining on the full (FullName, Country, University) identity; parity
-    joins on FullName only (the reference ships 42,595 bridge rows for
-    3,502 DOIs because of the fan-out). Dim side broadcast."""
+    """Author bridge (ETL cell 43, raw 1287-1299; SURVEY J2): explode
+    the affiliations, then key each row.
+
+    Without ``authors``, ``AuthorID`` is ``surrogate_key`` of the
+    (FullName, Country, University) identity, computed on the exploded
+    rows whose identity columns are all non-null: the same rows and keys
+    as an inner equi-join to the deduplicated dim (:func:`build_authors`,
+    ``dedup=True``). With ``authors``, the rows inner-join the dim (dim
+    side broadcast): on the full identity, or with ``on_identity=False``
+    on FullName only, reproducing quirk Q3 (the reference ships 42,595
+    bridge rows for 3,502 DOIs because of the fan-out)."""
     exploded = clean.select(
         F.col("doi").alias("DOI"),
         F.explode("authors_with_affiliations").alias("aff"),
@@ -232,26 +250,38 @@ def build_author_article_map(
         F.col("aff.country").alias("Country"),
         F.col("aff.university").alias("University"),
     )
+    if authors is None:
+        return exploded.dropna(subset=list(AUTHOR_IDENTITY)).select(
+            "DOI", surrogate_key(*AUTHOR_IDENTITY).alias("AuthorID")
+        )
     keys = list(AUTHOR_IDENTITY) if on_identity else ["FullName"]
     return exploded.join(F.broadcast(authors), keys, "inner").select(
         "DOI", "AuthorID"
     )
 
 
-def build_keyword_article_map(clean: DataFrame, keywords: DataFrame) -> DataFrame:
-    """Keyword bridge (ETL cell 45, raw 1317-1324): explode + inner join
-    on the keyword string (SURVEY J3). Dim side broadcast."""
+def build_keyword_article_map(
+    clean: DataFrame, keywords: DataFrame | None = None
+) -> DataFrame:
+    """Keyword bridge (ETL cell 45, raw 1317-1324; SURVEY J3): explode,
+    then key each row. Without ``keywords``, ``KeywordID`` is
+    ``surrogate_key(Keyword)`` on the non-null exploded keywords: the
+    same rows and keys as an inner join to the deduplicated dim. With
+    ``keywords``, the rows inner-join the dim on the keyword string (dim
+    side broadcast), as parity mode's per-occurrence dim requires."""
     exploded = clean.select(
         F.col("doi").alias("DOI"), F.explode("keywords").alias("Keyword")
     )
+    if keywords is None:
+        return exploded.dropna(subset=["Keyword"]).select(
+            "DOI", surrogate_key("Keyword").alias("KeywordID")
+        )
     return exploded.join(F.broadcast(keywords), "Keyword", "inner").select(
         "DOI", "KeywordID"
     )
 
 
-def build_star(
-    raw: DataFrame, parity: bool = False, checkpoint_clean: bool = False
-) -> dict[str, DataFrame]:
+def build_star(raw: DataFrame, parity: bool = False) -> dict[str, DataFrame]:
     """Full pipeline: clean + all eight output tables.
 
     ``parity=False`` (default): fixed semantics (Q2/Q3/Q4/Q5/Q7 repaired,
@@ -260,23 +290,41 @@ def build_star(
     bridges joined on FullName, topics/dates from the uncleaned frame,
     date filter via subtract, dead email filter.
 
-    ``checkpoint_clean=True`` materializes the shared cleaning lineage
-    once (``localCheckpoint``) before the dim/fact fan-out, so a caller
-    that consumes several outputs in one job pays one corpus scan
-    instead of re-running the cleaning chain per branch. Default off:
-    the production path (``materialize_star``) persists each table to
-    parquet anyway, and single-output callers would pay an eager
-    materialization for nothing. Values are identical either way.
+    The cleaned frame is always materialized, once: it is a lazy
+    ``localCheckpoint``, so the first action on any output fills it and
+    every other output reads its blocks instead of re-running the scan,
+    the enrichment and the cleaning chain. Its blocks live as long as the
+    returned DataFrames. Planning the checkpoint makes AQE run the
+    cleaned lineage's shuffle stages here, at build time; only its final
+    stage waits for the first action. A caller that reads several outputs
+    in concurrent jobs should fill it first with one action: a task that
+    computes it after another job has finished the checkpoint reports SQL
+    metrics whose plan may already be collected, and Spark logs each one
+    as an ERROR (the data is unaffected).
+
+    Keys: every dim key is ``surrogate_key`` of its natural key. In fixed
+    mode the fact's ``TopicID`` and both bridges' keys are computed from
+    the natural key on the row, and the fact's publishers join, a no-op
+    once ``dedup_issn`` leaves one row per ISSN, is skipped; only
+    ``DateID`` is joined. Parity mode joins all three fact dims and both
+    bridge dims, whose keys or cardinalities differ from the computed
+    form there.
     """
-    clean = clean_documents(raw, parity=parity)
-    if checkpoint_clean:
-        clean = clean.localCheckpoint()
+    clean = clean_documents(raw, parity=parity).localCheckpoint(eager=False)
     dim_source = raw if parity else clean
     publishers = build_publishers(clean, dedup_issn=not parity)
     topics = build_topics(dim_source)
     dates = build_dates(dim_source)
     keywords = build_keywords(clean, dedup=not parity)
     authors = build_authors(clean, dedup=not parity)
+    if parity:
+        articles = build_articles(clean, dates, topics, publishers)
+        author_map = build_author_article_map(clean, authors, on_identity=False)
+        keyword_map = build_keyword_article_map(clean, keywords)
+    else:
+        articles = build_articles(clean, dates)
+        author_map = build_author_article_map(clean)
+        keyword_map = build_keyword_article_map(clean)
     return {
         "clean": clean,
         "publishers": publishers,
@@ -284,11 +332,9 @@ def build_star(
         "dates": dates,
         "keywords": keywords,
         "authors": authors,
-        "articles": build_articles(clean, topics, dates, publishers),
-        "author_article_map": build_author_article_map(
-            clean, authors, on_identity=not parity
-        ),
-        "keyword_article_map": build_keyword_article_map(clean, keywords),
+        "articles": articles,
+        "author_article_map": author_map,
+        "keyword_article_map": keyword_map,
     }
 
 

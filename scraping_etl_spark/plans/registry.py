@@ -338,7 +338,8 @@ Round-10 rotation (consolidation round — NO new gates; burns the
 driver-verification queue down to zero): seats 1-40 are the entire
 r9 queue (every entry that had never had a driver CORRECTNESS row);
 seat 41 re-seats ``star_pipeline`` (operator changed:
-``build_star(checkpoint_clean=True)`` collapses the per-rollup
+a then-optional ``build_star`` checkpoint of the cleaned frame
+(always on today) collapses the per-rollup
 re-execution of the shared cleaning lineage to one corpus scan —
 values identical, plan shape changed, re-seat policy applies); seats
 42-50 take the nine most senior r8-green entries

@@ -183,14 +183,13 @@ def _rollup(df: DataFrame, name: str, nat: F.Column, key: F.Column) -> DataFrame
 def q_star_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole fixed-mode star build as ONE driver row per output
     table. Natural-key checksums; bridge/fact cardinalities pin the
-    surrogate-keyed joins (any fan-out, drop, or dedup regression
-    moves a count).
-
-    ``checkpoint_clean=True``: this gate consumes all nine outputs in
-    one job, so the shared cleaning lineage materializes ONCE instead
-    of re-running per rollup branch (~30 exchanges → one corpus scan +
-    rollups; values identical — r9 verdict item 5)."""
-    star = SS.build_star(synth_articles(spark, sf_dir), checkpoint_clean=True)
+    surrogate keys (any fan-out, drop, or dedup regression moves a
+    count). ``build_star`` materializes the cleaned lineage once, so the
+    nine rollup branches read it instead of re-running the cleaning
+    chain per branch. The branches run as concurrent jobs, so one count
+    fills it first (see ``build_star``)."""
+    star = SS.build_star(synth_articles(spark, sf_dir))
+    star["clean"].count()
     cw = lambda *cols: F.concat_ws("|", *cols)  # noqa: E731
     parts = [
         _rollup(

@@ -61,7 +61,7 @@ def _merge_overwrite_by_key(batch_df: DataFrame, out_dir: str, keys: list[str]) 
     if sink_exists:
         current = spark.read.parquet(out_dir)
         merged = current.join(
-            batch_df.select(*keys).distinct(), keys, "left_anti"
+            batch_df.select(*keys), keys, "left_anti"
         ).unionByName(batch_df)
     else:  # first batch — sink doesn't exist yet
         merged = batch_df

@@ -4,6 +4,8 @@ refactor can't silently reintroduce a cross join or lose a broadcast."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -243,3 +245,29 @@ def test_ivf_decontaminate_stored_cell_equivalence(spark):
         ).collect())
     )
     assert got == want
+
+
+def _joins(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(r"(?m)^[\s:+-]*Join ", plan))
+
+
+@pytest.mark.parametrize(
+    "parity, expected",
+    [
+        # fixed: keys computed from natural keys; only DateID is joined
+        (False, {"articles": 1, "author_article_map": 0, "keyword_article_map": 0}),
+        # parity: topics/dates/publishers and both bridge dims stay joined
+        (True, {"articles": 3, "author_article_map": 1, "keyword_article_map": 1}),
+    ],
+)
+def test_star_fact_and_bridge_joins(spark, parity, expected):
+    import os
+
+    from scraping_etl_spark import schemas
+    from scraping_etl_spark.etl.star_schema import build_star
+    from scraping_etl_spark.sources.readers import read_json_array
+
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "articles.json")
+    star = build_star(read_json_array(spark, fixture, schemas.RAW_ARTICLES), parity=parity)
+    assert {name: _joins(star[name]) for name in expected} == expected

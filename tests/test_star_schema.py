@@ -12,7 +12,9 @@ F8-F10, and quirks Q2/Q3/Q4/Q5/Q7 in both fixed and parity modes.
 
 from __future__ import annotations
 
+import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,6 +158,87 @@ def test_keyword_bridge_parity_fanout(star_parity):
     # d1(graphs→2, ml→2) + d2(ml→2, nlp→1) + d11(spam→1) +
     # d12(graphs→2) + d13(crypto→1) = 11.
     assert star_parity["keyword_article_map"].count() == 11
+
+
+def _multiset(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _fixture_doc(doi):
+    with open(FIXTURE) as f:
+        return next(d for d in json.load(f) if d["doi"] == doi)
+
+
+@pytest.fixture(scope="module")
+def raw_null_keys(spark):
+    """d1 plus a copy carrying every NULL natural key the computed keys
+    must treat like an inner (bridges) or left (fact) join: a NULL topic,
+    affiliations with a NULL country and a NULL university, a NULL
+    keyword, and one author listed twice in the same article."""
+    d1 = _fixture_doc("10.1/d1")
+    alice = d1["authors_with_affiliations"][0]
+    n1 = dict(
+        d1,
+        doi="10.1/n1",
+        topic=None,
+        keywords=["graphs", None, "ml"],
+        authors_with_affiliations=[
+            alice,
+            dict(alice, author="Eve Null", country=None),
+            dict(alice, author="Frank Null", university=None),
+            alice,
+        ],
+    )
+    return spark.createDataFrame([d1, n1], schemas.RAW_ARTICLES)
+
+
+def _joined(src):
+    """The fact and bridges joined back to fixed-mode dims built from ``src``."""
+    return {
+        "articles": S.build_articles(
+            src, S.build_dates(src), S.build_topics(src), S.build_publishers(src)
+        ),
+        "author_article_map": S.build_author_article_map(src, S.build_authors(src)),
+        "keyword_article_map": S.build_keyword_article_map(src, S.build_keywords(src)),
+    }
+
+
+def test_computed_keys_equal_dim_joins_with_null_keys(raw_null_keys):
+    star = S.build_star(raw_null_keys)
+    for name, df in _joined(star["clean"]).items():
+        assert _multiset(star[name]) == _multiset(df), name
+    # the cleaning drops Eve's NULL-country affiliation (P9), so compare
+    # the computed keys on the uncleaned frame too, where it survives
+    raw = raw_null_keys
+    computed = {
+        "articles": S.build_articles(raw, S.build_dates(raw)),
+        "author_article_map": S.build_author_article_map(raw),
+        "keyword_article_map": S.build_keyword_article_map(raw),
+    }
+    for name, df in _joined(raw).items():
+        assert _multiset(computed[name]) == _multiset(df), name
+    # the input exercised each NULL path
+    topic_ids = {r.DOI: r.TopicID for r in star["articles"].collect()}
+    assert topic_ids["101n1"] is None and topic_ids["101d1"] is not None
+    n1_authors = computed["author_article_map"].filter(F.col("DOI") == "10.1/n1")
+    assert n1_authors.count() == 2  # Alice twice; Eve and Frank have a NULL key part
+    n1_keywords = star["keyword_article_map"].filter(F.col("DOI") == "101n1")
+    assert n1_keywords.count() == 2  # graphs, ml
+
+
+def test_parity_topic_join_misses_scrubbed_topic(spark):
+    # Q7 parity: the topics dim comes from the raw frame, the fact from
+    # the scrubbed one, so a topic the scrub changes finds no dim row and
+    # its TopicID stays NULL; fixed mode keys the scrubbed topic.
+    doc = dict(_fixture_doc("10.1/d1"), topic="AI/ML")
+    raw = spark.createDataFrame([doc], schemas.RAW_ARTICLES)
+    fixed = S.build_star(raw)
+    parity = S.build_star(raw, parity=True)
+    assert parity["articles"].collect()[0].TopicID is None
+    assert (
+        fixed["articles"].collect()[0].TopicID
+        == fixed["topics"].collect()[0].TopicID
+    )
 
 
 def test_surrogate_keys_deterministic_under_repartition(raw):
