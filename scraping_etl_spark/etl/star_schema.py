@@ -78,25 +78,21 @@ def clean_documents(raw: DataFrame, parity: bool = False) -> DataFrame:
 
 def build_publishers(clean: DataFrame, dedup_issn: bool = True) -> DataFrame:
     """Publishers dim (ETL cell 31, raw 1040-1044): nested projection +
-    distinct. The reference keys articles→publishers on ISSN while the
+    distinct, as in parity mode. The reference keys articles→publishers on ISSN while the
     dim is distinct on all three columns, so one ISSN with two observed
     (Name, Quartile) pairs fans the fact join out; ``dedup_issn`` keeps
-    one deterministic row per ISSN (min Name, then min Quartile)."""
+    one deterministic row per ISSN (min Name, then min Quartile, NULLs
+    first) with a single aggregation, i.e. one shuffle."""
     dim = clean.select(
         F.col("publisher.ISSN").alias("ISSN"),
         F.col("publisher.name").alias("Name"),
         F.col("publisher.Quartile").alias("Quartile"),
-    ).distinct()
-    if dedup_issn:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("ISSN").orderBy("Name", "Quartile")
-        dim = (
-            dim.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    return dim
+    )
+    if not dedup_issn:
+        return dim.distinct()
+    return dim.groupBy("ISSN").agg(
+        F.min(F.struct("Name", "Quartile")).alias("p")
+    ).select("ISSN", "p.Name", "p.Quartile")
 
 
 def build_topics(source: DataFrame) -> DataFrame:

@@ -657,8 +657,20 @@ def incremental_star_stream(
 
     Dims are orders smaller than facts, so the scan-merge-swap is
     cheap at any scale; the fact and bridge paths only ever rewrite the
-    replayed batch's own partition."""
+    replayed batch's own partition.
+
+    A micro-batch's table writes (five, or six with keywords) run as
+    concurrent Spark jobs, each in the query's job group, so
+    ``query.stop()`` cancels them all. Each table has its own directory,
+    so every write keeps its own swap, crash recovery and replay
+    semantics unchanged. The batch waits for every write; any failed
+    write then fails the micro-batch, and the query replays it on
+    restart."""
     import os
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    from pyspark.util import inheritable_thread_target
 
     from scraping_etl_spark.etl.star_schema import surrogate_key
 
@@ -683,20 +695,13 @@ def incremental_star_stream(
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.withColumn("TopicID", surrogate_key("topic"))
-        # fact
-        _overwrite_own_partition(
-            batch_df.select(
-                F.col("doi").alias("DOI"),
-                F.col("title").alias("Title"),
-                "TopicID",
-                F.col("site").alias("Website"),
-            ),
-            batch_id,
-            fact_dir,
+        fact = batch_df.select(
+            F.col("doi").alias("DOI"),
+            F.col("title").alias("Title"),
+            "TopicID",
+            F.col("site").alias("Website"),
         )
-        # dims: keyed dedup-merge (idempotent under replay)
         new_topics = batch_df.select("TopicID", F.col("topic").alias("Topic")).distinct()
-        _merge_overwrite_by_key(new_topics, topic_dir, ["TopicID"])
         exploded = batch_df.select(
             F.col("doi").alias("DOI"), F.explode("authors").alias("FullName")
         )
@@ -706,15 +711,18 @@ def incremental_star_stream(
             .withColumn("AuthorID", surrogate_key("FullName"))
             .select("AuthorID", "FullName")
         )
-        _merge_overwrite_by_key(new_authors, author_dir, ["AuthorID"])
-        # bridge: fact-scale, so fact-path idempotency
-        _overwrite_own_partition(
-            exploded.select(
-                "DOI", surrogate_key("FullName").alias("AuthorID")
-            ).distinct(),
-            batch_id,
-            bridge_dir,
-        )
+        author_edges = exploded.select(
+            "DOI", surrogate_key("FullName").alias("AuthorID")
+        ).distinct()
+        writes = [
+            # fact
+            partial(_overwrite_own_partition, fact, batch_id, fact_dir),
+            # dims: keyed dedup-merge (idempotent under replay)
+            partial(_merge_overwrite_by_key, new_topics, topic_dir, ["TopicID"]),
+            partial(_merge_overwrite_by_key, new_authors, author_dir, ["AuthorID"]),
+            # bridge: fact-scale, so fact-path idempotency
+            partial(_overwrite_own_partition, author_edges, batch_id, bridge_dir),
+        ]
         # keywords dim + bridge — the authors pair's symmetric twin
         if "keywords" in batch_df.columns:
             kw_exploded = batch_df.select(
@@ -726,14 +734,21 @@ def incremental_star_stream(
                 .withColumn("KeywordID", surrogate_key("Keyword"))
                 .select("KeywordID", "Keyword")
             )
-            _merge_overwrite_by_key(new_keywords, keyword_dir, ["KeywordID"])
-            _overwrite_own_partition(
-                kw_exploded.select(
-                    "DOI", surrogate_key("Keyword").alias("KeywordID")
-                ).distinct(),
-                batch_id,
-                kw_bridge_dir,
-            )
+            keyword_edges = kw_exploded.select(
+                "DOI", surrogate_key("Keyword").alias("KeywordID")
+            ).distinct()
+            writes += [
+                partial(_merge_overwrite_by_key, new_keywords, keyword_dir, ["KeywordID"]),
+                partial(_overwrite_own_partition, keyword_edges, batch_id, kw_bridge_dir),
+            ]
+        # the tables live in disjoint directories, so the writes run as
+        # concurrent jobs; the wrapper carries this thread's local
+        # properties (the query's job group) into each worker
+        inherit = inheritable_thread_target(batch_df.sparkSession)
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = [pool.submit(inherit(write)) for write in writes]
+        for future in futures:
+            future.result()  # every write has finished; re-raise the first failure
 
     writer = (
         stream.writeStream.outputMode("append")

@@ -39,6 +39,15 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    skipped = terminalreporter.stats.get("skipped", [])
+    n_slow = sum("slow" in getattr(rep, "keywords", {}) for rep in skipped)
+    if n_slow and not RUN_SLOW:
+        terminalreporter.write_line(
+            f"{n_slow} slow tests skipped; run them with RUN_SLOW_TESTS=1"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="scraping-etl-spark-tests", shuffle_partitions=8)

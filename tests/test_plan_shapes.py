@@ -271,3 +271,18 @@ def test_star_fact_and_bridge_joins(spark, parity, expected):
     fixture = os.path.join(os.path.dirname(__file__), "fixtures", "articles.json")
     star = build_star(read_json_array(spark, fixture, schemas.RAW_ARTICLES), parity=parity)
     assert {name: _joins(star[name]) for name in expected} == expected
+
+
+def test_publishers_dim_one_shuffle(spark):
+    # fixed mode keeps one row per ISSN with a single aggregation: no
+    # window and one shuffle (the checkpointed clean frame adds none)
+    import os
+
+    from scraping_etl_spark import schemas
+    from scraping_etl_spark.etl.star_schema import build_star
+    from scraping_etl_spark.sources.readers import read_json_array
+
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "articles.json")
+    plan = _plan(build_star(read_json_array(spark, fixture, schemas.RAW_ARTICLES))["publishers"])
+    assert "Window" not in plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan

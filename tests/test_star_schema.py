@@ -70,6 +70,42 @@ def test_publishers_dim(star):
     }
 
 
+def test_publishers_dedup_matches_window_form(spark):
+    # one row per ISSN, the minimum (Name, Quartile) with NULLs first:
+    # the same rows as distinct + row_number over (Name, Quartile), on
+    # exact duplicates, ties on Name, NULL Name/Quartile and a NULL ISSN
+    from pyspark.sql import Window
+    from pyspark.sql import types as T
+
+    rows = [
+        ("A", "Zeta", "Q1"), ("A", "Alpha", "Q3"), ("A", "Alpha", "Q2"),
+        ("A", "Alpha", "Q2"),
+        ("B", "Beta", "Q1"), ("B", None, "Q4"),
+        ("C", "Gamma", None), ("C", "Gamma", "Q1"),
+        ("D", None, None), ("D", "Delta", "Q1"),
+        (None, "Nil", "Q2"), (None, "Nil", None),
+        ("E", "Eps", "Q2"),
+    ]
+    schema = T.StructType([T.StructField("publisher", schemas.PUBLISHER)])
+    clean = spark.createDataFrame(
+        [({"ISSN": i, "name": n, "Quartile": q},) for i, n, q in rows], schema
+    )
+    w = Window.partitionBy("ISSN").orderBy("Name", "Quartile")
+    window_form = (
+        S.build_publishers(clean, dedup_issn=False)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    got = S.build_publishers(clean)
+    assert got.columns == ["ISSN", "Name", "Quartile"]
+    assert _multiset(got) == _multiset(window_form)
+    assert _multiset(got) == Counter([
+        ("A", "Alpha", "Q2"), ("B", None, "Q4"), ("C", "Gamma", None),
+        ("D", None, None), (None, "Nil", None), ("E", "Eps", "Q2"),
+    ])
+
+
 def test_topics_and_dates_dims(star):
     assert {r.Topic for r in star["topics"].collect()} == {"AI", "Big Data", "Security"}
     dates = {r.PublicationDate: r for r in star["dates"].collect()}

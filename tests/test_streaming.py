@@ -223,6 +223,172 @@ def test_incremental_star_stream(spark, tmp_path):
     assert after == before
 
 
+# two stream files, one micro-batch each: a topic, an author and a
+# keyword recur across files, one author twice in one article, and one
+# article has no authors
+STAR_RECORDS = [
+    [
+        {"doi": "d1", "title": "t1", "topic": "AI", "site": "sd",
+         "authors": ["Ann", "Bob"], "keywords": ["ml", "graphs"]},
+        {"doi": "d2", "title": "t2", "topic": "IoT", "site": "sd",
+         "authors": ["Bob", "Bob"], "keywords": ["ml"]},
+        {"doi": "d3", "title": "t3", "topic": "AI", "site": "ieee",
+         "authors": [], "keywords": ["nlp"]},
+    ],
+    [
+        {"doi": "d4", "title": "t4", "topic": "AI", "site": "ieee",
+         "authors": ["Ann", "Cy"], "keywords": ["ml", "vision"]},
+        {"doi": "d5", "title": "t5", "topic": "Robots", "site": "sd",
+         "authors": ["Dee"], "keywords": ["graphs"]},
+    ],
+]
+
+
+@pytest.fixture
+def star_stream_src(tmp_path):
+    import json
+    import os
+    import time
+
+    src = tmp_path / "star_src"
+    src.mkdir()
+    now = time.time()
+    for i, recs in enumerate(STAR_RECORDS):
+        path = src / f"part-{i}.json"
+        with open(path, "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in recs)
+        os.utime(path, (now + i, now + i))  # the file source orders by mtime
+    return str(src)
+
+
+def _start_star_stream(spark, src, out, ckpt):
+    from scraping_etl_spark.streaming.pipeline import incremental_star_stream
+
+    schema = (
+        "doi string, title string, topic string, site string, "
+        "authors array<string>, keywords array<string>"
+    )
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
+    return incremental_star_stream(spark, stream, out, ckpt)
+
+
+def _want_star():
+    """Each table's natural keys as the input records imply them:
+    facts per record, dims distinct, bridges distinct (DOI, name)."""
+    from collections import Counter
+
+    recs = [r for batch in STAR_RECORDS for r in batch]
+    authored = {(r["doi"], a) for r in recs for a in r["authors"]}
+    tagged = {(r["doi"], k) for r in recs for k in r["keywords"]}
+    return {
+        "articles": Counter(r["doi"] for r in recs),
+        "topics": Counter({r["topic"] for r in recs}),
+        "authors": Counter({a for _, a in authored}),
+        "author_article_map": Counter(authored),
+        "keywords": Counter({k for _, k in tagged}),
+        "keyword_article_map": Counter(tagged),
+    }
+
+
+def _got_star(spark, out):
+    """The same keys read back from the sink; bridge keys resolve
+    through their dims, so a key missing from its dim fails here."""
+    from collections import Counter
+
+    def rows(t):
+        return spark.read.parquet(f"{out}/{t}").collect()
+
+    author_of = {r.AuthorID: r.FullName for r in rows("authors")}
+    keyword_of = {r.KeywordID: r.Keyword for r in rows("keywords")}
+    return {
+        "articles": Counter(r.DOI for r in rows("articles")),
+        "topics": Counter(r.Topic for r in rows("topics")),
+        "authors": Counter(author_of.values()),
+        "author_article_map": Counter(
+            (r.DOI, author_of[r.AuthorID]) for r in rows("author_article_map")
+        ),
+        "keywords": Counter(keyword_of.values()),
+        "keyword_article_map": Counter(
+            (r.DOI, keyword_of[r.KeywordID]) for r in rows("keyword_article_map")
+        ),
+    }
+
+
+def test_incremental_star_stream_tables_job_group_and_replay(
+    spark, star_stream_src, tmp_path
+):
+    """Two micro-batches: every table holds exactly the keys its input
+    records imply, every job of the query runs in its job group (the
+    concurrent table writes inherit it), and a full replay after wiping
+    the checkpoint converges to the same tables."""
+    import shutil
+
+    out, ckpt = str(tmp_path / "star"), str(tmp_path / "ckpt")
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    q = _start_star_stream(spark, star_stream_src, out, ckpt)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert len(q.recentProgress) >= 2
+    assert tracker.getJobIdsForGroup(str(q.runId))
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    want = _want_star()
+    assert _got_star(spark, out) == want
+
+    shutil.rmtree(ckpt)
+    q = _start_star_stream(spark, star_stream_src, out, ckpt)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert _got_star(spark, out) == want
+
+
+def test_incremental_star_stream_failed_write_fails_batch(
+    spark, star_stream_src, tmp_path, monkeypatch
+):
+    """A write that fails fast (a regular file where the keywords dim
+    should be) fails the micro-batch only after every other write has
+    finished, the slowest one included; once the blocker is gone the
+    restarted query replays the batch and all six tables converge."""
+    import os
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    from scraping_etl_spark.streaming import pipeline as P
+
+    merge = P._merge_overwrite_by_key
+
+    def slow_author_merge(batch_df, out_dir, keys):
+        if out_dir.endswith("authors"):
+            time.sleep(3)
+        merge(batch_df, out_dir, keys)
+
+    monkeypatch.setattr(P, "_merge_overwrite_by_key", slow_author_merge)
+    out, ckpt = str(tmp_path / "star"), str(tmp_path / "ckpt")
+    os.makedirs(out)
+    blocker = os.path.join(out, "keywords")
+    with open(blocker, "w") as f:
+        f.write("not a table\n")
+    q = _start_star_stream(spark, star_stream_src, out, ckpt)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert q.exception() is not None
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    # every other write of the failed batch ran to completion
+    assert not [p for p in os.listdir(out) if p.endswith((".tmp", ".old"))]
+    first = STAR_RECORDS[0]
+    got = spark.read.parquet(f"{out}/authors").collect()
+    assert {r.FullName for r in got} == {a for r in first for a in r["authors"]}
+    assert spark.read.parquet(f"{out}/articles").count() == len(first)
+
+    monkeypatch.undo()
+    os.remove(blocker)
+    q = _start_star_stream(spark, star_stream_src, out, ckpt)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert _got_star(spark, out) == _want_star()
+
+
 def test_merge_overwrite_by_key_crash_recovery(spark, tmp_path):
     """The keyed-upsert swap must survive a crash at any window: a sink
     renamed aside but never replaced (mid-swap) is rolled back before
